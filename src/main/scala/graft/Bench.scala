@@ -123,11 +123,15 @@ object Bench {
         s""""cached_rdd_disk_bytes":$rddDisk,"cached_rdd_parts":$rddPartsCached,""" +
         s""""cached_rdd_parts_expected":$rddPartsTotal"""
     val failJson = failedKeys.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line =
+    // stdout line and file line share every part but the per-query map
+    // (and the file's extra steal map), assembled from the same pieces
+    val prefix =
       s"""{"metric":"total","value":$total,"unit":"sec","loadavg1m":$loadavg,$cov,""" +
         s""""failures":${failedKeys.length},"failed_keys":$failJson,""" +
         s""""steal_top10":$stealTop,""" +
-        s""""queries":$qs,"sf":"$sfDir"}"""
+        s""""queries":"""
+    val suffix = s""","sf":"$sfDir""""
+    val line = prefix + qs + suffix + "}"
     // The driver truncates long stdout tails, losing most of the
     // per-query map from the shipped artifact; persist the full line
     // (plus the FULL per-key steal map, too wide for stdout) to a
@@ -137,11 +141,12 @@ object Bench {
       val p = java.nio.file.Paths.get("target/bench_full.json")
       java.nio.file.Files.createDirectories(p.getParent)
       // full-precision per-query map + full steal map live here
-      val fileLine = line.dropRight(1).replace(s""""queries":$qs""",
-        s""""queries":$qsFull""") + s""","steal_by_key":$stealAll}"""
+      val fileLine = prefix + qsFull + suffix + s""","steal_by_key":$stealAll}"""
       java.nio.file.Files.write(p, fileLine.getBytes("UTF-8"))
       println(s"""{"metric":"bench_full_path","path":"${p.toAbsolutePath}"}""")
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write target/bench_full.json: $e")
+    }
     println(line)
     spark.stop()
   }

@@ -87,4 +87,22 @@ class GraftSessionSpec extends AnyFunSuite {
       org.apache.spark.sql.SparkSession.setActiveSession(orig)
     }
   }
+
+  test("joinTuned's generated-class cache keeps more than Spark's default 100 classes") {
+    // Each query inlines its own long literals, so each compiles its own
+    // class: 150 distinct classes per loop. At Spark's default cache size
+    // (100) the second loop recompiles every one of them.
+    val spark = TestSpark.spark
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def loop(): Unit = (1 to 150).foreach { k =>
+      spark.range(10).selectExpr(s"id * ${k}L + ${k}L AS v").collect()
+    }
+    val c0 = compiles.getCount
+    loop()
+    val c1 = compiles.getCount
+    loop()
+    val c2 = compiles.getCount
+    assert(c1 - c0 >= 150, s"first loop compiled ${c1 - c0} classes")
+    assert(c2 - c1 == 0, s"second loop recompiled ${c2 - c1} classes")
+  }
 }
