@@ -2,38 +2,37 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** EVICTION-PROOF sharing of slim intermediate frames — the
-  * filesystem twin of `.cache()` (round-12 verdict item 1).
+/** The engine's one memo: every piece of work shared across a
+  * session's queries goes through this object.
   *
-  * `.cache()` shares a frame across sibling queries through Spark's
-  * plan-keyed in-memory relation cache, but under memory pressure the
-  * cached blocks are evicted and EVERY consumer re-pays the full
-  * upstream pipeline — measured on the official bench box: the dedup
-  * family's shared shingle/signature/sketch frames inflated 5–23×
-  * under loadavg ≈ 2.5 while the identical code ran 1.27× on an idle
-  * box. A frame memoized HERE is written once to a parquet file under
-  * `java.io.tmpdir` and every consumer reads the FILE — a cache miss
-  * costs a columnar file read (tens of ms for the MB-scale frames this
-  * holds), never a 40 s recompute, at any memory pressure.
+  *  - [[frame]] — a DataFrame per (session, key). It holds loaded
+  *    tables (`Tables`, so each table is listed and schema-inferred
+  *    once per session) and artifact scans (so an artifact's footers
+  *    are read once per session). Metadata only: each query still
+  *    plans and scans the data itself.
+  *  - [[dir]] — a directory built once per key under this JVM's root.
+  *    Parquet artifacts ([[ensure]], [[persist]], [[persistDerived]])
+  *    and the `graft.store.TsdbStore` gate fixtures live here.
+  *  - [[stamp]] — the name:size:mtime walk that caller keys fold in,
+  *    so a regenerated corpus re-keys and rebuilds.
   *
-  * Two forms:
-  *  - [[ensure]] — caller-keyed (corpus dir + content stamp + tag), the
-  *    `TsdbStore.ensureEventsStore` contract generalized;
+  * An artifact is the eviction-proof twin of `.cache()`: it is written
+  * once to parquet and every consumer reads the FILE, so under memory
+  * pressure a miss costs a columnar file read, never a recompute of the
+  * upstream pipeline. Artifact forms:
+  *  - [[ensure]] — caller-keyed (corpus dir + content stamp + tag);
   *  - [[persist]] — plan-keyed drop-in for `.cache()`: the key is a
   *    sha-256 digest of the frame's CANONICALIZED logical plan (expr
   *    ids normalized, so two identical constructions collide — the
-  *    sharing `.cache()` gave) plus a name:size:mtime stamp of every
-  *    file-source root in the plan (so a regenerated corpus re-derives
-  *    instead of serving stale rows — the `corpusStamp` contract).
-  *    Streaming frames pass through untouched (no files, no memo).
+  *    sharing `.cache()` gave) plus the [[stamp]] of every file-source
+  *    root in the plan. Streaming frames pass through untouched.
   *
-  * Materialization is EAGER (the write runs at first call, like
-  * `ensureEventsStore`), so the first declared query of a family pays
-  * the build honestly and siblings read the artifact. Artifacts are
-  * keyed into a per-JVM directory (sha-256 digest + a per-JVM uid), so
-  * concurrent JVMs over the same corpus never race on one path and a
-  * 32-bit hashCode collision can never conflate two corpora (ADVICE
-  * round 12); a JVM-exit hook deletes the directory best-effort.
+  * Builds are EAGER (the write runs at first call), so the first query
+  * of a family pays the build and its siblings read the artifact. The
+  * root directory is per JVM (sha-256 digest + a per-JVM uid), so
+  * concurrent JVMs over the same corpus never race on one path, and a
+  * JVM-exit hook deletes it best-effort. `graft.core.Caches.release`
+  * calls [[clear]].
   */
 object DiskMemo {
 
@@ -61,48 +60,37 @@ object DiskMemo {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes("UTF-8")).take(12).map("%02x".format(_)).mkString
 
-  /** digest(key) → artifact path. NOT built inside computeIfAbsent:
-    * memoized builds NEST (cappedPairStats' ensure reads the distinct-
-    * shingle frame through another ensure), and a nested
-    * computeIfAbsent on one ConcurrentHashMap throws
-    * IllegalStateException("Recursive update") whenever the two
-    * digests happen to share a hash bin — a hash-dependent flake.
-    * Instead: per-key lock objects serialize concurrent builders of
-    * the SAME key (the write still runs at most once per key per JVM),
-    * while nested builds of DIFFERENT keys just take their own lock.
-    * Build dependencies form a DAG (pair stats → shingles), so lock
-    * acquisition order is consistent and cannot deadlock. */
+  /** Keyed on the SparkSession object itself (identity equality), so
+    * two sessions never share a frame. Get-then-putIfAbsent, not
+    * computeIfAbsent: `mk` may itself call [[frame]] (the normalized
+    * events loader reads the raw one), and a nested computeIfAbsent on
+    * one map throws "Recursive update" when the keys share a bin. */
+  private val frames =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  private[graft] def frame(spark: SparkSession, key: String)(mk: => DataFrame): DataFrame = {
+    val k = (spark, key)
+    val hit = frames.get(k)
+    if (hit != null) hit
+    else { val df = mk; frames.putIfAbsent(k, df); frames.get(k) }
+  }
+
+  /** digest(key) → built directory. Builds NEST (pair stats read the
+    * shingle artifact; the store fixtures copy the base store), so the
+    * build does not run inside computeIfAbsent (see [[frames]]).
+    * Instead a per-key lock serializes concurrent builders of the SAME
+    * key (the build runs at most once per key until [[clear]]), while
+    * nested builds of other keys take their own lock. Build
+    * dependencies form a DAG, so lock order is consistent and cannot
+    * deadlock. */
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Per-(session, artifact path) memo of the artifact-SCAN DataFrame
-    * (round-19 optimization, guide §6): artifacts are write-once per
-    * key per JVM, so re-reading one is always the same immutable file
-    * set — but `spark.read.parquet` still re-lists and re-infers the
-    * footer schema on every consumer call (~80 ms each, FloorProbe).
-    * Metadata memo only; cleared with the build memo in [[clear]]
-    * (a post-clear rebuild overwrites the path, which would stale a
-    * kept listing). */
-  private val readMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def readCached(spark: SparkSession, path: String): DataFrame = {
-    val k = (spark, path)
-    val hit = readMemo.get(k)
-    if (hit != null) hit
-    else { val df = spark.read.parquet(path); readMemo.putIfAbsent(k, df); readMemo.get(k) }
-  }
-
-  /** Build-once / read-everywhere: the first call per `key` (full
-    * caller-provided key — fold a content stamp in when the source can
-    * regenerate) materializes `build` to parquet; every call returns a
-    * scan of that artifact. */
-  def ensure(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    readCached(spark, ensurePath(key)(build))
-
-  /** [[ensure]]'s artifact PATH — for consumers that splice the
-    * artifact into generated SQL (`parquet.\`path\``) instead of
-    * reading it through the DataFrame API (the TVF tier). */
-  def ensurePath(key: String)(build: => DataFrame): String = {
+  /** Build-once directory: the first call per `key` runs `build` on an
+    * empty directory under the root (a rebuild after [[clear]] starts
+    * from scratch, so appending builds stay idempotent); every call
+    * returns its path. */
+  private[graft] def dir(key: String)(build: String => Unit): String = {
     val dg = sha16(key)
     var path = built.get(dg)
     if (path == null) {
@@ -110,26 +98,47 @@ object DiskMemo {
       buildLocks.computeIfAbsent(dg, _ => new Object).synchronized {
         path = built.get(dg)
         if (path == null) {
-          val p = new java.io.File(root, dg).getAbsolutePath
-          build.write.mode("overwrite").parquet(p)
-          built.put(dg, p)
-          path = p
+          val d = new java.io.File(root, dg)
+          deleteRec(d)
+          path = d.getAbsolutePath
+          build(path)
+          built.put(dg, path)
         }
       }
     }
     path
   }
 
-  /** name:size:mtime stamp of every file-source root feeding `df` —
-    * the regen guard. Non-local URIs degrade to their path string
-    * (same contract as NearDup.corpusStamp). */
+  /** name:size:mtime of `f`, recursing into directories in name order;
+    * the bare path when `f` does not exist (a non-local URI keys on its
+    * path, and a regenerated corpus there needs `Caches.release`). */
+  private[graft] def stamp(f: java.io.File): String =
+    if (!f.exists) f.getPath
+    else if (f.isDirectory)
+      Option(f.listFiles).getOrElse(Array.empty[java.io.File])
+        .sortBy(_.getName).map(stamp).mkString("[", ",", "]")
+    else s"${f.getName}:${f.length}:${f.lastModified}"
+
+  private def read(spark: SparkSession, path: String): DataFrame =
+    frame(spark, path)(spark.read.parquet(path))
+
+  /** Build-once / read-everywhere: the first call per `key` (full
+    * caller-provided key — fold a content stamp in when the source can
+    * regenerate) materializes `build` to parquet; every call in one
+    * session returns the same scan of that artifact. */
+  def ensure(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    read(spark, ensurePath(key)(build))
+
+  /** [[ensure]]'s artifact PATH — for consumers that splice the
+    * artifact into generated SQL (`parquet.\`path\``) instead of
+    * reading it through the DataFrame API (the TVF tier). */
+  def ensurePath(key: String)(build: => DataFrame): String =
+    dir(key)(p => build.write.mode("overwrite").parquet(p))
+
+  /** [[stamp]] of every file-source root feeding `df` — the regen
+    * guard of the plan-keyed forms. */
   private def sourceStamp(df: DataFrame): String = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    def stampFile(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles).getOrElse(Array.empty[java.io.File])
-          .sortBy(_.getName).map(stampFile).mkString("[", ",", "]")
-      else s"${f.getName}:${f.length}:${f.lastModified}"
     val roots = df.queryExecution.analyzed.collect {
       case l: LogicalRelation => l.relation match {
         case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
@@ -142,7 +151,7 @@ object DiskMemo {
           val u = new java.net.URI(r)
           if (u.getPath != null) new java.io.File(u.getPath) else new java.io.File(r)
         } catch { case _: Throwable => new java.io.File(r) }
-      if (f.exists) stampFile(f) else r
+      if (f.exists) stamp(f) else r
     }.mkString(";")
   }
 
@@ -174,8 +183,8 @@ object DiskMemo {
     s"$rendered#$localData#${opaqueLeafIds(df)}"
   }
 
-  /** Identity fold for leaves the key cannot otherwise discriminate
-    * (ADVICE round 15): a LogicalRDD / ExternalRDD from
+  /** Identity fold for leaves the key cannot otherwise discriminate:
+    * a LogicalRDD / ExternalRDD from
     * `createDataFrame(rdd, schema)` canonicalizes to nothing but its
     * schema — two same-shape RDD-backed frames would share one digest
     * and the second would silently read the first's rows. File sources
@@ -187,7 +196,7 @@ object DiskMemo {
     * (same leaf objects → same ids). The identity is a monotonic
     * counter in an IdentityHashMap, NOT System.identityHashCode — the
     * latter is a non-unique 32-bit value whose collision would
-    * silently serve another frame's rows (round-16 review); the map's
+    * silently serve another frame's rows; the map's
     * strong refs are bounded by the number of distinct opaque frames
     * persisted per JVM, the same lifetime as the artifacts
     * themselves. */
@@ -217,11 +226,11 @@ object DiskMemo {
     * frames return unchanged. */
   def persist(df: DataFrame, tag: String = ""): DataFrame = {
     if (df.isStreaming) return df
-    readCached(df.sparkSession, persistPath(df, tag).get)
+    read(df.sparkSession, persistPath(df, tag).get)
   }
 
-  /** Memoize a DERIVED frame keyed on its INPUT's construction
-    * (round-18 optimization): like [[persist]], but the artifact holds
+  /** Memoize a DERIVED frame keyed on its INPUT's construction:
+    * like [[persist]], but the artifact holds
     * `build` while the digest comes from `keyDf` (plan + local rows +
     * source stamps + tag). The point is to let `build` embed values
     * that only exist after an eager driver action on `keyDf` (e.g.
@@ -234,7 +243,7 @@ object DiskMemo {
     * by-name: a hit never evaluates it. */
   def persistDerived(keyDf: DataFrame, tag: String)(build: => DataFrame): DataFrame = {
     if (keyDf.isStreaming) return build
-    readCached(keyDf.sparkSession, ensurePath(
+    read(keyDf.sparkSession, ensurePath(
       s"derived|$tag|${keyDf.schema.catalogString}|${planKey(keyDf)}|${sourceStamp(keyDf)}")(
       build))
   }
@@ -242,17 +251,15 @@ object DiskMemo {
   /** [[persist]]'s artifact PATH (None for streaming frames, which
     * cannot materialize). Same plan-keyed digest as persist, so a TVF
     * expansion that keys off the identical frame construction resolves
-    * to the artifact its DataFrame twin built — TVF tier artifact
-    * parity (round-14 verdict item 1). */
+    * to the artifact its DataFrame twin built. */
   def persistPath(df: DataFrame, tag: String = ""): Option[String] = {
     if (df.isStreaming) return None
     Some(ensurePath(
       s"$tag|${df.schema.catalogString}|${planKey(df)}|${sourceStamp(df)}")(df))
   }
 
-  /** Forget every memo entry (artifacts are overwritten on rebuild, so
-    * clearing is always safe; the read memo must go with the build memo
-    * or a rebuild's overwrite would stale a kept listing).
-    * graft.core.Caches.release calls this. */
-  private[graft] def clear(): Unit = { built.clear(); readMemo.clear() }
+  /** Forget every memo entry: the next use rebuilds each directory
+    * (artifact files stay until JVM exit or that rebuild). The frames
+    * go too, or a rebuild would stale a kept listing. */
+  private[graft] def clear(): Unit = { built.clear(); frames.clear() }
 }

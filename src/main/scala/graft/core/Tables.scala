@@ -14,37 +14,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * not the reader call.
   */
 object Tables {
-  /** Per-(session, sfDir, name) memo of the LOADED DataFrame (round-19
-    * optimization, guide §6 "file listing is cached per session"):
-    * every `spark.read.parquet` call builds a fresh InMemoryFileIndex
-    * (directory listing) and re-infers the schema from parquet footers
-    * — measured 80–260 ms of driver-side work per call (FloorProbe),
-    * paid by EVERY one of the 410 bench keys under the old spelling
-    * (~500+ loads ≈ 60 s of pure re-listing at sf0.1). The memo returns
-    * the same immutable DataFrame, so the relation is listed and
-    * schema-inferred once per session+corpus. This is METADATA
-    * memoization only — each query still plans, compiles, and scans
-    * the parquet data itself; nothing row-level is cached.
-    *
-    * Sound because the source tables under sfDir are immutable for the
-    * life of a session (the driver regenerates corpora only across
-    * JVMs); a long-lived session over a regenerated corpus calls
-    * `graft.core.Caches.release`, which clears this memo alongside the
-    * store/dedup memos. Keyed on the SparkSession object itself
-    * (identity equality — sessions don't override equals), so two
-    * sessions never share a frame. */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def cached(spark: SparkSession, key: String)(mk: => DataFrame): DataFrame = {
-    val k = (spark, key)
-    val hit = memo.get(k)
-    if (hit != null) hit
-    else { val df = mk; memo.putIfAbsent(k, df); memo.get(k) }
-  }
-  private[graft] def clearMemo(): Unit = memo.clear()
-
+  /** Loaded frames are memoized per (session, key) in
+    * [[DiskMemo.frame]]: each `spark.read.parquet` lists the files and
+    * infers the schema from the footers (80–260 ms of driver-side work
+    * per call), so a table is loaded once per session and corpus. The
+    * source tables under sfDir are immutable for the life of a session;
+    * a long-lived session over a regenerated corpus calls
+    * `graft.core.Caches.release`. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    cached(spark, s"$sfDir/$name") { spark.read.parquet(s"$sfDir/$name.parquet") }
+    DiskMemo.frame(spark, s"$sfDir/$name") { spark.read.parquet(s"$sfDir/$name.parquet") }
 
   /** events with `ts` exactly as the parquet footer declares it — no
     * rebuild. The legacy nanosAsLong flag is set so a timestamp[ns]
@@ -53,7 +31,7 @@ object Tables {
     * `ts` loads as a native timestamp. Use this when the caller needs
     * the physical column (pushdown queries, fixture re-writes). */
   def eventsRaw(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, s"$sfDir/events.raw") {
+    DiskMemo.frame(spark, s"$sfDir/events.raw") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.read.parquet(s"$sfDir/events.parquet")
     }
@@ -81,7 +59,7 @@ object Tables {
     * so all 128 downstream events queries are regen-proof.
     */
   private def loadEvents(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, s"$sfDir/events.normalized") {
+    DiskMemo.frame(spark, s"$sfDir/events.normalized") {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       val raw = eventsRaw(spark, sfDir)

@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   *    independent, so compaction parallelizes per day and never
   *    touches the rest of the store).
   *
-  * The gated queries (ops/StoreOps) build a REAL store under
-  * java.io.tmpdir from the events table plus an update batch, read it
+  * The gated queries (ops/StoreOps) build a REAL store in a
+  * `graft.core.DiskMemo` directory (deleted at JVM exit) from the
+  * events table plus an update batch, read it
   * back pruned, and resolve latest versions — their DuckDB oracles
   * recompute the same answers from the ORIGINAL events parquet, so a
   * round trip that dropped, duplicated, or re-typed any row
@@ -68,8 +69,8 @@ object TsdbStore {
     * a non-empty append lands real `event_date=…` directories, that
     * marker would make partition discovery see a MIXED layout
     * (conflicting directory structures) and fail the read — the
-    * empty-backfill-then-stream shape the streaming ingest advertises
-    * (ADVICE round 12). So after the append, if partition directories
+    * empty-backfill-then-stream shape the streaming ingest advertises.
+    * So after the append, if partition directories
     * now exist, the root marker files are removed. */
   def appendDayPartitioned(df: DataFrame, tsCol: String, path: String): Unit = {
     df.withColumn("event_date", to_date(col(tsCol)))
@@ -153,14 +154,19 @@ object TsdbStore {
     * agg keys on (hour, event_type): upstream partition pruning on the
     * raw scan composes (roll up only the days you need). */
   def rollupHourly(spark: SparkSession, srcPath: String, dstPath: String,
-                   tsCol: String, byCol: String, valueCol: String): Unit = {
-    val rolled = read(spark, srcPath)
-      .groupBy(date_trunc("hour", col(tsCol)).as("hour_ts"), col(byCol))
+                   tsCol: String, byCol: String, valueCol: String): Unit =
+    writeDayPartitioned(hourly(read(spark, srcPath), tsCol, byCol, valueCol),
+      "hour_ts", dstPath)
+
+  /** The hourly rollup aggregate every rollup writer shares:
+    * (hour_ts, `byCol`, n, sum_`valueCol`), the sum exact in
+    * decimal(18,2) per the §2.0 money policy. */
+  private def hourly(df: DataFrame, tsCol: String, byCol: String,
+                     valueCol: String): DataFrame =
+    df.groupBy(date_trunc("hour", col(tsCol)).as("hour_ts"), col(byCol))
       .agg(count(lit(1)).as("n"),
         sum(col(valueCol).cast("decimal(18,2)")).cast("double")
           .as(s"sum_$valueCol"))
-    writeDayPartitioned(rolled, "hour_ts", dstPath)
-  }
 
   /** INCREMENTAL rollup refresh — the continuous-aggregate maintenance
     * job: recompute ONLY the day partitions `batch` touched and
@@ -177,17 +183,14 @@ object TsdbStore {
     val days = batch.select(to_date(col(tsCol)).as("event_date"))
       .distinct().collect().map(_.getDate(0))
     if (days.isEmpty) return
-    val rolled = read(spark, srcPath)
-      .filter(col("event_date").isin(days.toIndexedSeq: _*)) // partition-pruned
-      .groupBy(date_trunc("hour", col(tsCol)).as("hour_ts"), col(byCol))
-      .agg(count(lit(1)).as("n"),
-        sum(col(valueCol).cast("decimal(18,2)")).cast("double")
-          .as(s"sum_$valueCol"))
+    val rolled = hourly(read(spark, srcPath)
+      .filter(col("event_date").isin(days.toIndexedSeq: _*)), // partition-pruned
+      tsCol, byCol, valueCol)
     // WRITER-scoped dynamic overwrite: the per-write option takes
     // precedence over the session conf, so no session-global
     // set/restore — a concurrent partitioned overwrite on the same
     // SparkSession can never inherit (or restore over) this write's
-    // mode (ADVICE r13 item 4).
+    // mode.
     rolled.withColumn("event_date", to_date(col("hour_ts")))
       .repartition(col("event_date"))
       .write.mode("overwrite")
@@ -224,9 +227,9 @@ object TsdbStore {
           count(lit(1)).as("n_versions"): _*)
 
   // ----------------------------------------------------------------
-  // Gate fixture: the events store (base load + one update batch),
-  // built ONCE per (session, corpus) — memoized like NearDup's label
-  // frames so the two gated queries share one write.
+  // Gate fixtures: the events store (base load + one update batch) and
+  // the stores derived from it, each built once per corpus in a
+  // DiskMemo directory so the gated queries share one write.
   // ----------------------------------------------------------------
 
   /** The deterministic update batch: every 1000th event re-ingested
@@ -241,104 +244,55 @@ object TsdbStore {
       .withColumn("event_id", col("event_id") + versionOffset)
       .withColumn("value", col("value") + valueBump)
 
-  /** size+mtime stamp of the source events parquet, so a regenerated
-    * corpus rebuilds the store (the NearDup.corpusStamp contract). */
-  private def stamp(d: String): String = {
-    def rec(f: java.io.File): String =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName).map(rec).mkString("[", ",", "]")
-      else s"${f.getName}:${f.length}:${f.lastModified}"
-    val f = new java.io.File(s"$d/events.parquet")
-    if (f.exists) rec(f) else d
-  }
+  /** Build-once fixture directory ([[graft.core.DiskMemo.dir]]) keyed
+    * on the fixture `kind`, the corpus and the stamp of its events
+    * parquet, so a regenerated corpus rebuilds. The store content is
+    * deterministic in the corpus, so the key needs no session. */
+  private def ensureBuilt(kind: String, sfDir: String)(build: String => Unit): String =
+    graft.core.DiskMemo.dir(
+      s"$kind|$sfDir ${graft.core.DiskMemo.stamp(new java.io.File(s"$sfDir/events.parquet"))}")(
+      build)
 
-  /** Per-JVM uid + strong digest (ADVICE round 12): the old path was a
-    * 32-bit hashCode of (sfDir + stamp) SHARED across JVMs — two
-    * processes over the same corpus raced overwrite-then-append on one
-    * directory, and a hashCode collision could conflate distinct
-    * corpora. Now: sha-256 prefix (collision-proof in practice) inside
-    * a per-JVM directory (no cross-process path sharing at all), and
-    * the JVM-wide `built` map's computeIfAbsent serializes concurrent
-    * builders of the same corpus within this JVM. The store content is
-    * deterministic in the corpus, so JVM-wide (not per-session) memo
-    * keys are sound; stamp changes (corpus regen) re-key and rebuild. */
-  private lazy val jvmUid: String =
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "")
-  private def sha16(s: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes("UTF-8")).take(12).map("%02x".format(_)).mkString
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // per-key lock objects, NOT computeIfAbsent-with-build: ensure*
-  // builds NEST (ensureCompactedStore/ensureRetainedStore/
-  // ensureRollupStore all call ensureEventsStore), and a nested
-  // computeIfAbsent on one ConcurrentHashMap throws
-  // IllegalStateException("Recursive update") whenever the two digests
-  // share a hash bin — the DiskMemo.ensure fix applied here. Build
-  // dependencies form a DAG, so lock order is consistent (no deadlock).
-  private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def ensureBuilt(key: String)(build: String => Unit): String = {
-    val dg = sha16(key)
-    var path = built.get(dg)
-    if (path == null) {
-      buildLocks.computeIfAbsent(dg, _ => new Object).synchronized {
-        path = built.get(dg)
-        if (path == null) {
-          val p = new java.io.File(
-            sys.props("java.io.tmpdir"), s"graft_store_${jvmUid}_$dg").getAbsolutePath
-          build(p)
-          built.put(dg, p)
-          path = p
-        }
-      }
-    }
-    path
-  }
-
-  /** The BASE LOAD alone (no update batch), built once per JVM+corpus
-    * — the staging store the batch-carrying fixtures derive from by
-    * FILE COPY (round-19 optimization, guide §6): the events store and
-    * the schema-evolution store share an identical base load, and the
-    * old spelling re-ran the full clustered partitioned write for each
-    * (~1.2 s of shuffle + 30-directory commit apiece at sf0.1) to
-    * produce byte-equivalent directories. Copying the staged base
-    * (2.8 MB / 30 day dirs → tens of ms) is content-identical —
-    * the copyRec device ensureRetainedStore already uses. */
+  /** The BASE LOAD alone (no update batch): the staging store the
+    * batch-carrying fixtures derive from by FILE COPY. The events store
+    * and the schema-evolution store share an identical base load, and
+    * copying it (2.8 MB / 30 day dirs at sf0.1: tens of ms) costs far
+    * less than a second clustered partitioned write. */
   private def ensureBaseStore(spark: SparkSession, sfDir: String): String =
-    ensureBuilt(s"base|$sfDir ${stamp(sfDir)}") { path =>
-      // STORE INVARIANT, enforced at load: (user_id, ts) — the upsert
-      // key — is non-null. The day-profile/vacuum grid rewrites count
-      // pre-agg rows where the oracle counts DISTINCT user_id; a NULL
-      // would form a grid row countDistinct excludes, silently
-      // breaking oracle exactness on a future corpus. raise_error
-      // rides the existing write pass — no extra scan.
+    ensureBuilt("base", sfDir) { path =>
+      // STORE INVARIANTS, enforced at load, riding the write pass (no
+      // extra scan):
+      //  - (user_id, ts), the upsert key, is non-null. The
+      //    day-profile/vacuum grid rewrites count pre-agg rows where the
+      //    oracle counts DISTINCT user_id; a NULL would form a grid row
+      //    countDistinct excludes, breaking oracle exactness.
+      //  - base event_id < versionOffset. The update batch and the v1
+      //    rollup of ensureIncRollupStore tell base rows from batch rows
+      //    by this bound; a larger base id would be silently dropped.
       val events = graft.core.Tables.events(spark, sfDir)
         .withColumn("user_id", expr(
-          "if(user_id IS NULL OR ts IS NULL, " +
-            "raise_error('events store invariant violated: NULL user_id/ts'), user_id)"))
+          s"if(user_id IS NULL OR ts IS NULL OR event_id >= $versionOffset, " +
+            "raise_error('events store invariant violated: NULL user_id/ts " +
+            s"or event_id >= $versionOffset'), user_id)"))
       writeDayPartitioned(events, "ts", path)
     }
 
-  /** Build (once per JVM+corpus) the gate's events store under
-    * java.io.tmpdir: bulk load (copied from [[ensureBaseStore]]) +
-    * appended update batch. Returns the store path. Idempotent:
-    * overwrite-then-append, so a rebuild after corpus regen yields
-    * byte-equivalent content. */
+  /** The gate's events store: bulk load (copied from
+    * [[ensureBaseStore]]) + appended update batch. Returns the store
+    * path. */
   def ensureEventsStore(spark: SparkSession, sfDir: String): String =
-    ensureBuilt(s"events|$sfDir ${stamp(sfDir)}") { path =>
+    ensureBuilt("events", sfDir) { path =>
       copyRec(new java.io.File(ensureBaseStore(spark, sfDir)),
         new java.io.File(path))
       val events = graft.core.Tables.events(spark, sfDir)
       appendDayPartitioned(updateBatch(events), "ts", path)
     }
 
-  /** Compact (once per JVM+corpus) the gate's events store at
-    * (user_id, ts) granularity — exactly the update batch's duplicated
-    * keys collapse, each to its max-event_id version. Returns the
-    * compacted store's path. */
+  /** The gate's events store compacted at (user_id, ts) granularity —
+    * exactly the update batch's duplicated keys collapse, each to its
+    * max-event_id version. Returns the compacted store's path. */
   def ensureCompactedStore(spark: SparkSession, sfDir: String): String =
-    ensureBuilt(s"compact|$sfDir ${stamp(sfDir)}") { dst =>
+    ensureBuilt("compact", sfDir) { dst =>
       val src = ensureEventsStore(spark, sfDir)
       compact(spark, src, dst, Seq("user_id", "ts"), "event_id", "ts")
     }
@@ -363,7 +317,7 @@ object TsdbStore {
     * metadata-only delete is the op under test (the copy exists only
     * so sibling gated queries keep the full store). */
   def ensureRetainedStore(spark: SparkSession, sfDir: String): String =
-    ensureBuilt(s"retain|$sfDir ${stamp(sfDir)}") { dst =>
+    ensureBuilt("retain", sfDir) { dst =>
       val src = ensureEventsStore(spark, sfDir)
       copyRec(new java.io.File(src), new java.io.File(dst))
       expirePartitions(dst, retentionCutoff)
@@ -380,7 +334,7 @@ object TsdbStore {
   /** Gate fixture: the hourly (hour × event_type) rollup store
     * materialized from the events store via [[rollupHourly]]. */
   def ensureRollupStore(spark: SparkSession, sfDir: String): String =
-    ensureBuilt(s"rollup|$sfDir ${stamp(sfDir)}") { dst =>
+    ensureBuilt("rollup", sfDir) { dst =>
       val src = ensureEventsStore(spark, sfDir)
       rollupHourly(spark, src, dst, "ts", "event_type", "value")
     }
@@ -391,30 +345,17 @@ object TsdbStore {
     * touched day partitions. The gated read proves incremental ≡ full
     * recompute (its oracle is the full-store hourly aggregate). */
   def ensureIncRollupStore(spark: SparkSession, sfDir: String): String =
-    ensureBuilt(s"incroll|$sfDir ${stamp(sfDir)}") { dst =>
-      // Source reuse (round-19 optimization, verdict item 3 / guide
-      // §6): the old spelling staged a PRIVATE copy of the events
-      // store (one full writeDayPartitioned of the corpus plus one
-      // appendDayPartitioned of the batch — two extra clustered
-      // partitioned writes) purely so the v1 rollup could aggregate
-      // "base load only". The shared gate store already holds
-      // base + update batch, and batch rows are identified exactly by
-      // the version offset (event_id >= 10^7, the as-of-version
-      // contract StoreSpec pins) — so v1 rolls up the SHARED store
-      // filtered below the offset (row-identical input ⇒ identical
-      // aggregate), and the refresh prunes the shared store to the
-      // touched days exactly as before. The incremental-refresh
-      // machinery under test (rollupRefreshDays: day-pruned re-agg +
-      // dynamic partition overwrite, untouched days byte-identical)
-      // is unchanged and still receipted by StoreSpec's mtime test.
+    ensureBuilt("incroll", sfDir) { dst =>
+      // v1 rolls up the SHARED events store filtered below the version
+      // offset: batch rows are exactly those with event_id >= 10^7 (the
+      // as-of-version contract StoreSpec pins, and a base-store
+      // invariant), so the filtered input is row-identical to the base
+      // load. The refresh then prunes the shared store to the touched
+      // days.
       val src = ensureEventsStore(spark, sfDir)
       val events = graft.core.Tables.events(spark, sfDir)
       val baseOnly = read(spark, src).filter(col("event_id") < versionOffset)
-      val v1 = baseOnly
-        .groupBy(date_trunc("hour", col("ts")).as("hour_ts"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      writeDayPartitioned(v1, "hour_ts", dst)
+      writeDayPartitioned(hourly(baseOnly, "ts", "event_type", "value"), "hour_ts", dst)
       rollupRefreshDays(spark, src, dst, updateBatch(events), "ts", "event_type", "value")
     }
 
@@ -423,19 +364,13 @@ object TsdbStore {
     * lacks — the "a later ingest added a field" shape. Read it with
     * [[readMerged]]; base rows surface NULL tags. */
   def ensureEvolvedStore(spark: SparkSession, sfDir: String): String =
-    ensureBuilt(s"evolve|$sfDir ${stamp(sfDir)}") { dst =>
-      // base load COPIED from the shared staging store (round-19 —
-      // identical bytes, no second full clustered write; see
-      // ensureBaseStore), then the tagged batch appends on top,
-      // exactly the "a later ingest added a field" shape under test.
+    ensureBuilt("evolve", sfDir) { dst =>
+      // base load copied from the shared staging store, then the tagged
+      // batch appends on top
       copyRec(new java.io.File(ensureBaseStore(spark, sfDir)),
         new java.io.File(dst))
       val events = graft.core.Tables.events(spark, sfDir)
       appendDayPartitioned(
         updateBatch(events).withColumn("batch_tag", lit("u1")), "ts", dst)
     }
-
-  /** Forget memoized store paths (graft.core.Caches). Rebuilds are
-    * idempotent overwrites, so clearing is always safe. */
-  private[graft] def clearMemo(s: SparkSession): Unit = built.clear()
 }

@@ -179,7 +179,7 @@ object NearDup {
     // DISK-memoized (plan-keyed): feeds the signature agg, the sizes
     // agg and both sides of the exact-verify join — and resolves to
     // the SAME artifact as every sibling minhash query over the same
-    // corpus (eviction-proof; round-12 verdict item 1)
+    // corpus (eviction-proof)
     val sh = graft.core.DiskMemo.persist(
       shingleNumsOf(docs, idCol, textCol).distinct(), "nd_sh")
     val bands = bandedSignatures(sh, nb, rpb)
@@ -217,28 +217,16 @@ object NearDup {
     * (a, b, inter, sza, szb) over DF-capped distinct shingle sets —
     * one CappedCollect agg, in-group pair explode, broadcast size
     * joins. Both the Jaccard and the containment scorers are one
-    * formula over this frame — and since round 12 the WHOLE frame is
-    * cached AND memoized driver-side (O(candidate pairs) rows of five
-    * int64s): each call constructs a fresh CappedCollect UDAF
-    * instance, so two builds canonicalize to DIFFERENT plans and
-    * Spark's plan-keyed cache can never share them (the labelsMemo
-    * lesson applied to an Aggregator) — the memo hands both gated
-    * queries the same frame, so the second pays only its scoring
-    * projection (verdict item 6). */
-  private val pairStatsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    * formula over this frame (O(candidate pairs) rows of five int64s),
+    * so it is built once per corpus into a DiskMemo artifact and both
+    * gated queries read the same scan of the FILE; the second pays only
+    * its scoring projection. The key is explicit (not the plan digest):
+    * each build constructs a fresh CappedCollect UDAF whose identity
+    * lands in the canonicalized plan, so plan-keyed forms could never
+    * match two builds. */
   private def cappedPairStats(s: SparkSession, d: String): DataFrame =
-    pairStatsMemo.computeIfAbsent((s, s"$d ${corpusStamp(d)}"),
-      // DISK-memoized (round-12 verdict item 1): the frame is written
-      // once per (corpus, stamp) and both scorers read the FILE — the
-      // in-memory `.cache()` of rounds ≤ 12 inflated 12–23× on the
-      // contended bench box when its blocks were evicted mid-DAG. The
-      // explicit key (not the plan digest) is required here: each
-      // build constructs a fresh CappedCollect UDAF whose identity
-      // lands in the canonicalized plan, so plan-keyed forms can never
-      // collide two builds.
-      _ => graft.core.DiskMemo.ensure(s, s"nd_pairstats|$d ${corpusStamp(d)}")(
-        cappedPairStatsBuild(s, d)))
+    graft.core.DiskMemo.ensure(s, s"nd_pairstats|$d ${corpusStamp(d)}")(
+      cappedPairStatsBuild(s, d))
   private def cappedPairStatsBuild(s: SparkSession, d: String): DataFrame = {
     val cappedDocs = udaf(
       new graft.udaf.CappedCollect.CappedCollectAgg(maxShingleDf.toInt),
@@ -249,9 +237,9 @@ object NearDup {
     // explode+hash pipeline is paid once per corpus (shared with the
     // whole minhash family) — and a contended-box rebuild of THIS
     // frame starts from a parquet scan, not a corpus scan.
-    // DISK-memoized (round 14 — was .cache()): feeds BOTH the sizes
-    // agg and the pair explode; an eviction re-paid the capped-collect
-    // agg per consumer under pressure (the r12 disease class).
+    // DISK-memoized: feeds BOTH the sizes agg and the pair explode,
+    // so an evictable cache would re-pay the capped-collect agg per
+    // consumer under memory pressure.
     val grouped = graft.core.DiskMemo.persist(
       shingleNums(s, d)
         .groupBy("x").agg(cappedDocs(col("doc_id")).as("cd"))
@@ -884,10 +872,9 @@ object NearDup {
     * (registry order: the sketch query itself) writes one int64/doc to
     * a parquet artifact, and every pair/cluster/survivor query — whose
     * thin-call simhashPairs plans build the identical canonicalized
-    * sketch subplan — reads the FILE. Rounds ≤ 12 shared this through
-    * `.cache()`, which the contended bench box evicted: each of the
-    * six downstream queries re-paid the token-explode + 60-column agg,
-    * 7–19× inflation (round-12 verdict item 1). */
+    * sketch subplan — reads the FILE. Shared through an evictable
+    * `.cache()` instead, each of the six downstream queries re-paid the
+    * token-explode + 60-column agg under memory pressure (7–19×). */
   def simhashDf(s: SparkSession, d: String): DataFrame =
     graft.core.DiskMemo.persist(
       simhashOf(T.documents(s, d), "doc_id", "text", bits = 60), "nd_sk")
@@ -896,7 +883,7 @@ object NearDup {
     * input — the `simhash_pairs` TVF splices this into its expansion
     * as a `parquet.` scan, so the SQL tier reads the SAME artifact the
     * DataFrame twins read instead of re-running the token-explode +
-    * `bits`-column sketch agg per call (round-14 verdict item 1).
+    * `bits`-column sketch agg per call.
     * Plan-keyed like [[simhashPairs]]'s persist — identical (docs,
     * bits) constructions resolve to one artifact. None only for
     * streaming input. */
@@ -1035,63 +1022,29 @@ object NearDup {
       bits = 60, maxDist = 1, blocking = "pigeonhole")
       .select("a", "b")
 
-  /** Connected-component labels over [[hamming1Pairs]], MEMOIZED per
-    * (session, dir). Label propagation ends in a materialized
-    * localCheckpoint whose plan is unique per invocation, so Spark's
-    * plan-keyed cache can never share it across the trio — each query
-    * would re-run the full edge build + every propagation round
-    * (measured: 3× ≈ 16.5 s at sf0.1). The driver-side memo hands all
-    * three queries the SAME checkpointed frame, so components are
-    * computed once per corpus and each query pays only its own small
-    * join/agg on top — the round-10 verdict's "stop computing the
-    * components three times". The frame is O(docs-in-clusters) rows of
-    * two int64s; entries are keyed by session so a stopped session's
-    * entry can never leak into a new one.
+  /** Connected-component labels over [[hamming1Pairs]], built once
+    * per corpus into a DiskMemo artifact. Label propagation ends in a
+    * localCheckpoint whose plan is unique per invocation, so nothing
+    * plan-keyed could share it across the cluster/survivor trio; the
+    * explicit key hands all three queries the same scan of the FILE,
+    * so components are computed once per corpus and each query pays
+    * only its own small join/agg on top. The key folds in
+    * [[corpusStamp]], so a session that regenerates the testdata under
+    * `d` gets fresh labels instead of the old corpus's clusters.
     *
-    * The key also folds in [[corpusStamp]] (size+mtime of the
-    * documents parquet), so a long-lived session that REGENERATES the
-    * testdata under `d` mid-session — the exact scenario the adaptive
-    * events loader exists for — gets fresh labels instead of silently
-    * serving the old corpus's clusters. Entries for retired stamps
-    * are a few KB each and are dropped by [[clearMemo]] /
-    * `graft.core.Caches.release` or session stop. */
-  private val labelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  /** Cheap content key for the corpus under `d`: name:size:mtime of
-    * the documents parquet (recursed when it is a directory dataset).
-    * For non-local URIs (hdfs://, s3a://) this degrades to the bare
-    * path and the regen-requires-`Caches.release` contract applies. */
-  private def corpusStamp(d: String): String = {
-    def stamp(f: java.io.File): String =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName).map(stamp).mkString("[", ",", "]")
-      else s"${f.getName}:${f.length}:${f.lastModified}"
-    val f = new java.io.File(s"$d/documents.parquet")
-    if (f.exists) stamp(f) else d
-  }
+    * minRounds=1: with the O(1) sum-fingerprint convergence test an
+    * early check that FAILS costs only an eager checkpoint + one cached
+    * scan, while a lazy round past the fixpoint wastes a real
+    * propagation shuffle — so check early. The convergence loop, not
+    * the knob, is the correctness argument (DedupCluster scaladoc). */
   private def clusterLabels(s: SparkSession, d: String): DataFrame =
-    // minRounds=1: with the O(1) sum-fingerprint convergence test
-    // (DedupCluster round-11 fix for the round-10 regression, where
-    // each check was a shuffle join) an early check that FAILS costs
-    // only an eager checkpoint + one cached scan, while a lazy round
-    // past the fixpoint wastes a real propagation shuffle — so check
-    // early. The convergence loop, not the knob, is the correctness
-    // argument (DedupCluster scaladoc).
-    labelsMemo.computeIfAbsent((s, s"$d ${corpusStamp(d)}"),
-      // DISK-memoized on top of the driver memo (round-12 verdict item
-      // 1): the label-prop result ends in localCheckpoint blocks that
-      // memory pressure can evict; written to parquet, the whole
-      // cluster/survivor trio reads a file instead of re-running the
-      // propagation loop (measured 7× inflation on the contended box).
-      _ => graft.core.DiskMemo.ensure(s, s"nd_labels|$d ${corpusStamp(d)}")(
-        DedupCluster.clusters(hamming1Pairs(s, d), iters = 20, minRounds = 1)))
+    graft.core.DiskMemo.ensure(s, s"nd_labels|$d ${corpusStamp(d)}")(
+      DedupCluster.clusters(hamming1Pairs(s, d), iters = 20, minRounds = 1))
 
-  /** Drop this session's memoized label/pair-stats frames
-    * (graft.core.Caches). */
-  private[graft] def clearMemo(s: SparkSession): Unit = {
-    labelsMemo.keySet.removeIf(_._1 eq s)
-    pairStatsMemo.keySet.removeIf(_._1 eq s)
-  }
+  /** Content key for the corpus under `d`: the DiskMemo stamp of the
+    * documents parquet. */
+  private def corpusStamp(d: String): String =
+    graft.core.DiskMemo.stamp(new java.io.File(s"$d/documents.parquet"))
 
   /** DuckDB CTE `sh(doc_id, simhash)` mirroring [[simhashDf]]. Lazy:
     * it is referenced from `ops` above, which initializes first. */

@@ -80,6 +80,17 @@ class DiskMemoSpec extends AnyFunSuite {
     assert(b.collect().map(_.getLong(0)).toSet === Set(9L))
   }
 
+  test("ensure builds a key once and hands a session the same frame object") {
+    var builds = 0
+    def build = { builds += 1; Seq((1L, "a"), (2L, "b")).toDF("k", "v") }
+    val a = DiskMemo.ensure(spark, "dm_ensure_once")(build)
+    val b = DiskMemo.ensure(spark, "dm_ensure_once")(build)
+    assert(a eq b, "a repeated ensure must return the memoized frame")
+    assert(builds === 1)
+    assert(scanPaths(a).head.contains("graft_diskmemo_"))
+    assert(a.collect().map(_.getLong(0)).toSet === Set(1L, 2L))
+  }
+
   test("streaming frames pass through untouched") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext

@@ -318,4 +318,54 @@ class StoreSpec extends AnyFunSuite {
         s"${r.get(0)}: share device mismatch")
     }
   }
+
+  test("every store fixture lives in its own DiskMemo directory (deleted at JVM exit)") {
+    val paths = Seq(
+      TsdbStore.ensureEventsStore _, TsdbStore.ensureCompactedStore _,
+      TsdbStore.ensureRetainedStore _, TsdbStore.ensureRollupStore _,
+      TsdbStore.ensureIncRollupStore _, TsdbStore.ensureEvolvedStore _,
+    ).map(_(spark, TestSpark.sfSmoke))
+    paths.foreach { p =>
+      assert(new java.io.File(p).getParentFile.getName.startsWith("graft_diskmemo_"),
+        s"store fixture outside the DiskMemo root: $p")
+    }
+    assert(paths.distinct.length === paths.length)
+  }
+
+  test("a base event_id at the version offset fails the store build loudly") {
+    // the v1 incremental rollup tells base rows from batch rows by
+    // event_id < 10^7; a larger base id must not be silently dropped
+    val dir = java.nio.file.Files.createTempDirectory("graft_guard").toFile
+    val minId = events.agg(min("event_id")).head().getLong(0)
+    events.withColumn("event_id",
+        when(col("event_id") === minId, lit(10000000L)).otherwise(col("event_id")))
+      .write.parquet(new java.io.File(dir, "events.parquet").getAbsolutePath)
+    val e =
+      try intercept[Exception](TsdbStore.ensureEventsStore(spark, dir.getAbsolutePath))
+      finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains("events store invariant violated")), msgs.mkString("\n"))
+  }
+
+  test("Caches.release drops the memo: tables reload, stores rebuild, rows unchanged") {
+    def dataFiles(p: String): Set[String] = {
+      def rec(f: java.io.File): Seq[String] =
+        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(rec)
+        else if (f.getName.endsWith(".parquet")) Seq(f.getName) else Nil
+      rec(new java.io.File(p)).toSet
+    }
+    def rows(p: String): Seq[String] =
+      TsdbStore.read(spark, p).collect().map(_.toString).toSeq.sorted
+    val t1 = graft.core.Tables.events(spark, TestSpark.sfSmoke)
+    val p1 = TsdbStore.ensureEventsStore(spark, TestSpark.sfSmoke)
+    val (files1, rows1) = (dataFiles(p1), rows(p1))
+    graft.core.Caches.release(spark)
+    val t2 = graft.core.Tables.events(spark, TestSpark.sfSmoke)
+    assert(!(t1 eq t2), "Tables must reload after release")
+    val p2 = TsdbStore.ensureEventsStore(spark, TestSpark.sfSmoke)
+    assert(p2 === p1)
+    assert(dataFiles(p2) !== files1, "the store build did not run again")
+    assert(rows(p2) === rows1)
+  }
 }
